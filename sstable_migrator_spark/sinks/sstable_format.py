@@ -103,10 +103,14 @@ memory still serializes on one task.
 
 from __future__ import annotations
 
+import bisect
 import io
 import os
 import struct
+import threading
+import time
 import zlib
+from collections import OrderedDict
 from dataclasses import dataclass, field
 
 from sstable_migrator_spark.functions.cassandra import (
@@ -1678,6 +1682,34 @@ def _parse_partition(
     return partition, off
 
 
+def _single_prefix(directory: str) -> str:
+    """The component prefix of the one sstable in ``directory``."""
+    tocs = [f for f in os.listdir(directory) if f.endswith("-TOC.txt")]
+    if len(tocs) != 1:
+        raise ValueError(f"expected one sstable in {directory}, found {tocs}")
+    return tocs[0][: -len("-TOC.txt")]
+
+
+def _compression_info(ci: bytes) -> tuple[str, int, int, list[int]]:
+    """CompressionInfo.db: (compressor name, chunk length, uncompressed
+    data length, on-disk chunk offsets)."""
+    (nlen,) = struct.unpack_from(">H", ci, 0)
+    cname = ci[2 : 2 + nlen].decode("utf-8")
+    o = 2 + nlen
+    (n_opts,) = struct.unpack_from(">i", ci, o)
+    o += 4
+    for _ in range(n_opts):
+        for _ in range(2):  # key, value writeUTF pairs
+            (sl,) = struct.unpack_from(">H", ci, o)
+            o += 2 + sl
+    chunk_len, data_len = struct.unpack_from(">iq", ci, o)
+    o += 12
+    (n_chunks,) = struct.unpack_from(">i", ci, o)
+    o += 4
+    offsets = list(struct.unpack_from(f">{n_chunks}q", ci, o))
+    return cname, chunk_len, data_len, offsets
+
+
 def read_sstable(directory: str, prefix: str | None = None, verify: bool = True) -> dict:
     """Parse a BIG-format sstable written by SSTableWriter. Types come
     from the Statistics.db HEADER component; Index.db positions are
@@ -1686,10 +1718,7 @@ def read_sstable(directory: str, prefix: str | None = None, verify: bool = True)
     ``{stats, partitions: [{key, key_components, token, rows: [{clustering,
     cells}]}], index_ok, digest_ok, bloom_all_present}``."""
     if prefix is None:
-        tocs = [f for f in os.listdir(directory) if f.endswith("-TOC.txt")]
-        if len(tocs) != 1:
-            raise ValueError(f"expected one sstable in {directory}, found {tocs}")
-        prefix = tocs[0][: -len("-TOC.txt")]
+        prefix = _single_prefix(directory)
 
     def comp(name: str) -> bytes:
         with open(os.path.join(directory, f"{prefix}-{name}"), "rb") as fh:
@@ -1706,21 +1735,10 @@ def read_sstable(directory: str, prefix: str | None = None, verify: bool = True)
     raw_file = comp("Data.db")
     compression_meta = None
     if has("CompressionInfo.db"):
-        ci = comp("CompressionInfo.db")
-        (nlen,) = struct.unpack_from(">H", ci, 0)
-        cname = ci[2 : 2 + nlen].decode("utf-8")
-        o = 2 + nlen
-        (n_opts,) = struct.unpack_from(">i", ci, o)
-        o += 4
-        for _ in range(n_opts):
-            for _ in range(2):  # key, value writeUTF pairs
-                (sl,) = struct.unpack_from(">H", ci, o)
-                o += 2 + sl
-        chunk_len, data_len = struct.unpack_from(">iq", ci, o)
-        o += 12
-        (n_chunks,) = struct.unpack_from(">i", ci, o)
-        o += 4
-        offsets = [struct.unpack_from(">q", ci, o + i * 8)[0] for i in range(n_chunks)]
+        cname, chunk_len, data_len, offsets = _compression_info(
+            comp("CompressionInfo.db")
+        )
+        n_chunks = len(offsets)
         if cname != "DeflateCompressor":
             raise NotImplementedError(f"compressor {cname}")
         chunks = []
@@ -1841,6 +1859,95 @@ def _index_entries(idx: bytes) -> list[tuple[bytes, int]]:
     return entries
 
 
+# point_lookup's reader table, keyed by (abspath(directory), prefix):
+# the in-process analogue of Cassandra's SSTableReader, opened once per
+# sstable instead of once per lookup. Capped so a whole ring's sstables
+# fit; least recently used readers are evicted past the cap.
+_READER_CAP = 256
+# The writer rewrites components in place (same inode), so a rewrite
+# within the filesystem's timestamp granularity can leave a component's
+# (dev, inode, size, mtime) unchanged. A reader opened on a component
+# modified more recently than this serves the call that opened it and
+# is not kept.
+_SETTLE_NS = 2_000_000_000
+
+
+def _stat_sig(st: os.stat_result) -> tuple[int, int, int, int]:
+    return (st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns)
+
+
+class _SSTableReader:
+    """Everything a point lookup needs from one sstable except Data.db
+    itself: the parsed Statistics, the key/clustering/regular-column
+    types, the bloom filter, the Index.db positions with their
+    (token, key) DecoratedKey list, the CompressionInfo chunk map and
+    the Data.db size, plus the stat signature of each component read."""
+
+    def __init__(self, directory: str, prefix: str):
+        self.base = os.path.join(directory, f"{prefix}-")
+        self.sigs: dict[str, tuple[int, int, int, int]] = {}
+        self.stats = stats = _parse_statistics(self._read("Statistics.db"))
+        self.key_types = _key_component_types(stats["key_type"])
+        self.clus_types = [_marshal_to_type(t) for t in stats["clustering_types"]]
+        self.reg = [(n, _marshal_to_type(t)) for n, t in stats["regular_columns"]]
+        self.bloom = _Bloom.deserialize(self._read("Filter.db"))
+        entries = _index_entries(self._read("Index.db"))
+        self.decorated = [(cassandra_token_bytes(k), k) for k, _ in entries]
+        self.positions = [pos for _, pos in entries]
+        self.chunks: tuple[int, list[int]] | None = None
+        if os.path.exists(self.base + "CompressionInfo.db"):
+            _cname, chunk_len, _data_len, offsets = _compression_info(
+                self._read("CompressionInfo.db")
+            )
+            self.chunks = (chunk_len, offsets)
+        st = os.stat(self.base + "Data.db")
+        self.sigs["Data.db"] = _stat_sig(st)
+        self.data_size = st.st_size
+        now = time.time_ns()
+        self.settled = all(now - sig[3] >= _SETTLE_NS for sig in self.sigs.values())
+
+    def _read(self, name: str) -> bytes:
+        with open(self.base + name, "rb") as fh:
+            self.sigs[name] = _stat_sig(os.fstat(fh.fileno()))
+            return fh.read()
+
+    def current(self) -> bool:
+        """True when no component it read changed or went missing."""
+        try:
+            return all(
+                _stat_sig(os.stat(self.base + name)) == sig
+                for name, sig in self.sigs.items()
+            )
+        except OSError:
+            return False
+
+
+_READERS: OrderedDict[tuple[str, str], _SSTableReader] = OrderedDict()
+_READERS_LOCK = threading.Lock()
+
+
+def _open_reader(directory: str, prefix: str) -> _SSTableReader:
+    """The reader table's entry for one sstable, reopened when any
+    component it read has changed on disk."""
+    key = (os.path.abspath(directory), prefix)
+    with _READERS_LOCK:
+        reader = _READERS.get(key)
+        if reader is not None:
+            _READERS.move_to_end(key)
+    if reader is not None and reader.current():
+        return reader
+    reader = _SSTableReader(key[0], prefix)
+    with _READERS_LOCK:
+        if reader.settled:
+            _READERS[key] = reader
+            _READERS.move_to_end(key)
+            while len(_READERS) > _READER_CAP:
+                _READERS.popitem(last=False)
+        else:
+            _READERS.pop(key, None)
+    return reader
+
+
 def point_lookup(
     directory: str, key_components: list, prefix: str | None = None
 ) -> dict | None:
@@ -1851,56 +1958,44 @@ def point_lookup(
     offset. Compressed tables inflate only the chunks covering the
     partition (CompressionInfo's logical->physical map), widening the
     window chunk by chunk if the partition spans a boundary — never
-    the whole file. Cassandra itself rebuilds the in-memory index
-    summary from Index.db on open (SSTableReader.buildSummary); this
-    reader does the same implicitly by bisecting the parsed index.
+    the whole file.
+
+    Like Cassandra's SSTableReader, each sstable is opened once: a
+    process-wide reader table (LRU, ``_READER_CAP`` sstables, guarded
+    by a lock) keeps per ``(abspath(directory), prefix)`` the parsed
+    Statistics, the key/clustering/column types, the bloom filter, the
+    Index.db positions with their precomputed (token, key) list, the
+    CompressionInfo chunk map and the Data.db size. Every call stats
+    each component the reader used and reopens the sstable when any
+    (device, inode, size, mtime) changed or a file went missing; a
+    reader whose components were modified within the last
+    ``_SETTLE_NS`` is used for that call only, since an in-place
+    rewrite that fast may not change the signature. Per call, what is
+    still done: the TOC listing when ``prefix`` is None (so a second
+    generation still raises), those stats, one key serialization, one
+    bloom probe, one token hash, one bisect and a windowed Data.db read
+    of the partition — Data.db itself is never cached.
 
     ``key_components`` are python values matching the key column types
     (e.g. ``["example.com", 4]`` for a (text, int) composite key).
     Returns the partition dict or None when absent."""
-    import bisect
-
     if prefix is None:
-        tocs = [f for f in os.listdir(directory) if f.endswith("-TOC.txt")]
-        if len(tocs) != 1:
-            raise ValueError(f"expected one sstable in {directory}, found {tocs}")
-        prefix = tocs[0][: -len("-TOC.txt")]
-
-    def comp(name: str) -> bytes:
-        with open(os.path.join(directory, f"{prefix}-{name}"), "rb") as fh:
-            return fh.read()
-
-    stats = _parse_statistics(comp("Statistics.db"))
-    ktypes = _key_component_types(stats["key_type"])
-    if len(key_components) != len(ktypes):
+        prefix = _single_prefix(directory)
+    r = _open_reader(directory, prefix)
+    if len(key_components) != len(r.key_types):
         raise ValueError(
-            f"{len(key_components)} key components for {len(ktypes)}-part key"
+            f"{len(key_components)} key components for {len(r.key_types)}-part key"
         )
-    key = serialize_key(*(t.ser(v) for t, v in zip(ktypes, key_components)))
-    tok = cassandra_token_bytes(key)
-
-    bloom = _Bloom.deserialize(comp("Filter.db"))
-    if not bloom.might_contain(key):
+    key = serialize_key(*(t.ser(v) for t, v in zip(r.key_types, key_components)))
+    if not r.bloom.might_contain(key):
         return None
 
-    entries = _index_entries(comp("Index.db"))
-    decorated = [(cassandra_token_bytes(k), k) for k, _ in entries]
-    i = bisect.bisect_left(decorated, (tok, key))
-    if i >= len(entries) or entries[i][0] != key:
+    i = bisect.bisect_left(r.decorated, (cassandra_token_bytes(key), key))
+    if i >= len(r.decorated) or r.decorated[i][1] != key:
         return None  # bloom false positive
-    pos = entries[i][1]
-
-    clus_types = [_marshal_to_type(t) for t in stats["clustering_types"]]
-    reg = [(n, _marshal_to_type(t)) for n, t in stats["regular_columns"]]
-    min_ts = stats["min_timestamp_us"]
-
-    data_path = os.path.join(directory, f"{prefix}-Data.db")
-    data_size = os.path.getsize(data_path)
-
-    def pread(start: int, length: int) -> bytes:
-        with open(data_path, "rb") as fh:
-            fh.seek(start)
-            return fh.read(length)
+    pos = r.positions[i]
+    clus_types, reg, data_size = r.clus_types, r.reg, r.data_size
+    min_ts = r.stats["min_timestamp_us"]
 
     # A truncated parse window surfaces as whatever the deserializer
     # tripped over — slice indexing, struct unpack, a multibyte UTF-8
@@ -1909,21 +2004,14 @@ def point_lookup(
     # propagate the error.
     _truncation_errors = (IndexError, struct.error, ValueError, UnicodeDecodeError)
 
-    if os.path.exists(os.path.join(directory, f"{prefix}-CompressionInfo.db")):
-        ci = comp("CompressionInfo.db")
-        (nlen,) = struct.unpack_from(">H", ci, 0)
-        o = 2 + nlen
-        (n_opts,) = struct.unpack_from(">i", ci, o)
-        o += 4
-        for _ in range(n_opts):
-            for _ in range(2):
-                (sl,) = struct.unpack_from(">H", ci, o)
-                o += 2 + sl
-        chunk_len, data_len = struct.unpack_from(">iq", ci, o)
-        o += 12
-        (n_chunks,) = struct.unpack_from(">i", ci, o)
-        o += 4
-        offsets = [struct.unpack_from(">q", ci, o + j * 8)[0] for j in range(n_chunks)]
+    def pread(start: int, length: int) -> bytes:
+        with open(r.base + "Data.db", "rb") as fh:
+            fh.seek(start)
+            return fh.read(length)
+
+    if r.chunks is not None:
+        chunk_len, offsets = r.chunks
+        n_chunks = len(offsets)
 
         def inflate(ci_from: int, ci_to: int) -> bytes:
             # one seek+read covering exactly the needed chunk span —
@@ -1963,7 +2051,7 @@ def point_lookup(
                     raise
                 win *= 2
     part["start"] = pos
-    part["key_components"] = _split_key(part["key"], stats["key_type"])
+    part["key_components"] = _split_key(part["key"], r.stats["key_type"])
     return part
 
 
@@ -1979,10 +2067,7 @@ def iter_sstable_partitions(directory: str, prefix: str | None = None):
     verification — integrity-checked reads go through
     ``read_sstable``."""
     if prefix is None:
-        tocs = [f for f in os.listdir(directory) if f.endswith("-TOC.txt")]
-        if len(tocs) != 1:
-            raise ValueError(f"expected one sstable in {directory}, found {tocs}")
-        prefix = tocs[0][: -len("-TOC.txt")]
+        prefix = _single_prefix(directory)
 
     def comp(name: str) -> bytes:
         with open(os.path.join(directory, f"{prefix}-{name}"), "rb") as fh:
@@ -1996,23 +2081,10 @@ def iter_sstable_partitions(directory: str, prefix: str | None = None):
     raw_file = comp("Data.db")
     ci_path = os.path.join(directory, f"{prefix}-CompressionInfo.db")
     if os.path.exists(ci_path):
-        ci = comp("CompressionInfo.db")
-        (nlen,) = struct.unpack_from(">H", ci, 0)
-        cname = ci[2 : 2 + nlen].decode("utf-8")
-        o = 2 + nlen
-        (n_opts,) = struct.unpack_from(">i", ci, o)
-        o += 4
-        for _ in range(n_opts):
-            for _ in range(2):
-                (sl,) = struct.unpack_from(">H", ci, o)
-                o += 2 + sl
-        _chunk_len, data_len = struct.unpack_from(">iq", ci, o)
-        o += 12
-        (n_chunks,) = struct.unpack_from(">i", ci, o)
-        o += 4
-        offsets = [
-            struct.unpack_from(">q", ci, o + i * 8)[0] for i in range(n_chunks)
-        ]
+        cname, _chunk_len, data_len, offsets = _compression_info(
+            comp("CompressionInfo.db")
+        )
+        n_chunks = len(offsets)
         if cname != "DeflateCompressor":
             raise NotImplementedError(f"compressor {cname}")
         chunks = []

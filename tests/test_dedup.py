@@ -4,6 +4,7 @@ sanity — the operator shapes the 100 TB path relies on."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sstable_migrator_spark.operators.dedup import (
@@ -367,25 +368,29 @@ def test_exact_span_pairs(spark):
     assert out == {(0, 1): 2}
 
 
-def test_span_key_kernel_bit_identity(spark):
+@pytest.mark.parametrize("k", [3, 8])
+def test_span_key_kernel_bit_identity(spark, k):
     """The round-11 window-key kernel (dedup._span_window_keys) must
     reproduce the oracle-pinned expression form EXACTLY —
     md5(array_join(slice(tk, i, k), ' ')) per window, distinct per
     doc — including multi-byte UTF-8 (char offsets vs byte offsets),
     repeated windows (kernel-side dedup), docs of exactly k tokens,
-    and whitespace runs (tokens collapses them before either path)."""
+    and whitespace runs (tokens collapses them before either path).
+    k=8 is what q138 uses. Arrow batches of two records make the
+    kernel iterate over several batches, some emptied by the filter."""
+    import pandas as pd
     from pyspark.sql import functions as F
 
     from sstable_migrator_spark.functions import text as TX
     from sstable_migrator_spark.operators.dedup import _span_window_keys
 
-    k = 3
     rows = [
-        (0, "a b c d e"),
-        (1, "x  y\tz"),                          # exactly k after \s+ split
-        (2, "café naïve 日本語 résumé emoji✨ tail"),
-        (3, "r r r r r r"),                      # one distinct window
+        (0, "a b c d e f g h i j k l"),
+        (1, " \t".join(f"x{i}" for i in range(k))),  # exactly k after \s+ split
+        (2, "café naïve 日本語 résumé emoji✨ tail über straße 中文 fin"),
+        (3, " ".join(["r"] * (k + 3))),             # one distinct window
         (4, "short two"),                        # < k tokens: no windows
+        (5, "z"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     toks = docs.select(
@@ -401,13 +406,31 @@ def test_span_key_kernel_bit_identity(spark):
             )
         ).alias("wkey"),
     ).distinct()
-    got = _span_window_keys(toks, k)
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-    # doc 3 has 6 tokens of "r": 4 windows, all identical -> ONE key
-    assert got.filter(F.col("doc") == 3).count() == 1
-    # doc 4 never reaches the kernel (filtered); defensive skip inside
-    assert got.filter(F.col("doc") == 4).count() == 0
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf, None)
+    spark.conf.set(conf, "2")
+    try:
+        one_task = docs.select(
+            F.col("doc_id").alias("doc"),
+            TX.tokens(F.lower(F.col("text"))).alias("tk"),
+        ).coalesce(1)
+        sizes = one_task.mapInPandas(
+            lambda it: (pd.DataFrame({"n": [len(b)]}) for b in it), "n long"
+        ).collect()
+        assert len(sizes) == 3, sizes
+        for inp in (toks, one_task):
+            got = _span_window_keys(inp, k)
+            assert got.exceptAll(want).count() == 0
+            assert want.exceptAll(got).count() == 0
+            # doc 3 has k+3 tokens of "r": 4 windows, all identical -> ONE key
+            assert got.filter(F.col("doc") == 3).count() == 1
+            # doc 4 is filtered from toks; the kernel skips it in one_task
+            assert got.filter(F.col("doc") == 4).count() == 0
+    finally:
+        if old is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, old)
 
 
 def test_winnow_fingerprints_rightmost_rule_and_density(spark):

@@ -771,6 +771,185 @@ def test_point_lookup_compressed_chunk_windows(tmp_path):
 
 
 # ---------------------------------------------------------------------------
+# point_lookup's reader table (each sstable opened once, stat-invalidated)
+# ---------------------------------------------------------------------------
+
+
+def _write_keyed(directory, tag, compression=None, generation=1, n_keys=30, key="key"):
+    """``n_keys`` partitions of five rows; ``tag`` is the one-character
+    value prefix, so two tags (or two key prefixes of one length) give
+    same-size components."""
+    w = SSTableWriter(
+        str(directory), _clustered_table(), generation=generation,
+        compression=compression, chunk_length=512,
+    )
+    for i in range(n_keys * 5):
+        w.add_row({"k": f"{key}{i % n_keys}", "c": i, "v": f"{tag}{i:04d}"})
+    w.close()
+
+
+def _age(directory, seconds=60):
+    """Backdate every file in ``directory`` past the reader table's
+    settle window, as files written a minute ago would be."""
+    import os
+    import time
+
+    past = time.time() - seconds
+    for name in os.listdir(directory):
+        os.utime(os.path.join(directory, name), (past, past))
+
+
+def _cached(directory):
+    import os
+
+    from sstable_migrator_spark.sinks import sstable_format as sf
+
+    return [r for k, r in sf._READERS.items() if k[0] == os.path.abspath(directory)]
+
+
+@pytest.mark.parametrize("compression", [None, "deflate"])
+def test_reader_table_lookup_equals_read_sstable(tmp_path, compression):
+    """Against a warm reader, every key's lookup returns exactly the
+    partition read_sstable parses from the whole file."""
+    from sstable_migrator_spark.sinks.sstable_format import point_lookup
+
+    _write_keyed(tmp_path, "a", compression)
+    _age(tmp_path)
+    point_lookup(str(tmp_path), ["key0"])
+    (reader,) = _cached(tmp_path)
+    want = read_sstable(str(tmp_path))["partitions"]
+    assert len(want) == 30
+    for p in want:
+        assert point_lookup(str(tmp_path), [p["key_components"][0].decode()]) == p
+    assert point_lookup(str(tmp_path), ["absent"]) is None
+    assert _cached(tmp_path) == [reader]
+
+
+def test_reader_table_rewrite_same_prefix(tmp_path):
+    """Rewriting the sstable in place under the same generation (same
+    inode, same component sizes) must never serve the old rows —
+    including two rewrites inside one timestamp tick of a filesystem
+    with coarse timestamps, which leave every stat signature as it
+    was."""
+    import os
+
+    from sstable_migrator_spark.sinks.sstable_format import _stat_sig, point_lookup
+
+    def values(key="key3"):
+        part = point_lookup(str(tmp_path), [key])
+        return {r["cells"]["v"][0] for r in part["rows"]}
+
+    def sigs():  # of the components the reader uses
+        return {n: _stat_sig(os.stat(tmp_path / f"nb-1-big-{n}")) for n in old.sigs}
+
+    _write_keyed(tmp_path, "a")
+    _age(tmp_path)
+    assert values() == {"a"}
+    (old,) = _cached(tmp_path)
+    _write_keyed(tmp_path, "b")
+    assert values() == {"b"}
+    assert _cached(tmp_path) == []  # freshly written: not kept
+    before = sigs()
+    _write_keyed(tmp_path, "c", key="kez")  # new keys: a stale index would misplace them
+    for name, sig in before.items():
+        os.utime(tmp_path / f"nb-1-big-{name}", ns=(sig[3], sig[3]))
+    assert sigs() == before
+    assert point_lookup(str(tmp_path), ["key3"]) is None
+    assert values("kez3") == {"c"}
+    _age(tmp_path, seconds=30)
+    assert values("kez3") == {"c"}
+    (new,) = _cached(tmp_path)
+    assert new is not old
+    assert values("kez3") == {"c"} and _cached(tmp_path) == [new]
+
+
+def test_reader_table_second_generation_raises(tmp_path):
+    from sstable_migrator_spark.sinks.sstable_format import point_lookup
+
+    _write_keyed(tmp_path, "a")
+    _age(tmp_path)
+    assert point_lookup(str(tmp_path), ["key1"]) is not None
+    assert len(_cached(tmp_path)) == 1
+    _write_keyed(tmp_path, "b", generation=2)
+    with pytest.raises(ValueError, match="expected one sstable"):
+        point_lookup(str(tmp_path), ["key1"])
+    part = point_lookup(str(tmp_path), ["key1"], prefix="nb-2-big")
+    assert {r["cells"]["v"][0] for r in part["rows"]} == {"b"}
+
+
+def test_reader_table_lru_eviction(tmp_path, monkeypatch):
+    """Opening cap + 1 sstables evicts the least recently used one;
+    lookups on every sstable stay correct afterwards."""
+    from collections import OrderedDict
+
+    from sstable_migrator_spark.sinks import sstable_format as sf
+
+    cap = sf._READER_CAP
+    monkeypatch.setattr(sf, "_READERS", OrderedDict())
+    dirs = [tmp_path / f"r{i}" for i in range(cap + 1)]
+    for i, d in enumerate(dirs):
+        d.mkdir()
+        _write_keyed(d, "abcdefgh"[i % 8], n_keys=2)
+        _age(d)
+    for d in dirs:
+        assert sf.point_lookup(str(d), ["key1"]) is not None
+    assert len(sf._READERS) == cap
+    assert _cached(dirs[0]) == [] and len(_cached(dirs[1])) == 1
+    # reopening the evicted one evicts the next least recently used
+    assert sf.point_lookup(str(dirs[0]), ["key1"]) is not None
+    assert _cached(dirs[1]) == [] and len(_cached(dirs[0])) == 1
+    for i, d in enumerate(dirs):
+        part = sf.point_lookup(str(d), ["key1"])
+        assert {r["cells"]["v"] for r in part["rows"]} == {
+            f"{'abcdefgh'[i % 8]}{c:04d}" for c in (1, 3, 5, 7, 9)
+        }
+    assert len(sf._READERS) == cap
+
+
+def test_reader_table_threaded_churn(tmp_path, monkeypatch):
+    """More threads than cores look up across more sstables than the
+    table holds, so readers are opened, evicted and reopened
+    concurrently; every lookup stays correct and the cap holds."""
+    import sys
+    import threading
+    from collections import OrderedDict
+
+    from sstable_migrator_spark.sinks import sstable_format as sf
+
+    monkeypatch.setattr(sf, "_READERS", OrderedDict())
+    monkeypatch.setattr(sf, "_READER_CAP", 3)
+    dirs = [tmp_path / f"r{i}" for i in range(6)]
+    for i, d in enumerate(dirs):
+        d.mkdir()
+        _write_keyed(d, "abcdef"[i], n_keys=4)
+        _age(d)
+    errors = []
+
+    def worker(seed):
+        try:
+            for j in range(60):
+                i = (seed + j) % len(dirs)
+                part = sf.point_lookup(str(dirs[i]), [f"key{j % 4}"])
+                assert {r["cells"]["v"][0] for r in part["rows"]} == {"abcdef"[i]}
+        except Exception as e:  # noqa: BLE001 — reported by the main thread
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker, args=(s,)) for s in range(12)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(sf._READERS) <= 3
+
+
+# ---------------------------------------------------------------------------
 # review-pass regressions (round 4)
 # ---------------------------------------------------------------------------
 
